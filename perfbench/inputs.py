@@ -33,9 +33,10 @@ BOILERPLATE = (
     "including the usual notices about rights and redistribution"
 )
 
-#: the contract corpus vocabulary: the contract queries' documents draw
-#: from these 30 words, which saturates shingle overlap (the regime the
-#: exact-Jaccard prefix join is expensive in)
+#: the contract corpus vocabulary: the 30 words the ``documents`` tables
+#: of ``bench.py``'s scale-factor data draw from, uniformly, 10 to 100
+#: per text; it saturates shingle overlap (the regime the exact-Jaccard
+#: prefix join is expensive in)
 DOC_WORDS = (
     "join hash row batch scan column customer filter small slow merge "
     "order vector line table data agg value key stream window a spark "
@@ -186,15 +187,20 @@ def hot_corpus(n_unique: int, n_hot: int, seed: int):
 # --------------------------------------------------------------------------
 
 def contract_tables(n_docs: int, n_emb: int, seed: int):
-    """``documents(doc_id, text, lang, source, n_chars)`` over the
-    30-word vocabulary (every 25th text repeats an earlier one, so the
-    exact-dedup query has work) and ``embeddings(vec_id, embedding,
+    """``documents(doc_id, text, lang, source, n_chars)`` shaped like
+    ``bench.py``'s ``documents`` tables: texts over the 30-word
+    vocabulary, 5% of them (every 20th) an earlier text with the token
+    ``dup`` appended, as those tables plant near-duplicates, and 1% (the
+    50th of every 100) an exact repeat, so the exact-dedup query has
+    work at a few hundred docs; and ``embeddings(vec_id, embedding,
     label)``: 64-d float vectors around 10 label centroids."""
     def build(spark, out):
         rng = np.random.default_rng(seed)
         texts = []
         for i in range(n_docs):
-            if i and i % 25 == 0:
+            if i and i % 20 == 0:
+                texts.append(texts[int(rng.integers(0, i))] + " dup")
+            elif i % 100 == 50:
                 texts.append(texts[int(rng.integers(0, i))])
             else:
                 n = int(rng.integers(10, 100))

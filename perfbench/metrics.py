@@ -48,6 +48,7 @@ def per_layer() -> list[tuple[str, str, str]]:
             ("components.edges_in", "count", "lower"),
             ("components.count", "count", "lower"),
             ("components.max_size", "count", "lower"),
+            # large-star rounds; 0: the driver union-find solved it
             ("components.star_loop", "count", "lower"),
             ("survivors.losers", "count", "higher")]
     for q in BENCH_QUERIES:

@@ -34,6 +34,7 @@ The last line of stdout is
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shutil
@@ -61,7 +62,7 @@ def _environment(run_dir: str) -> dict[str, str]:
     """Process environment and JVM options of a run; returns the session
     confs. Python workers import the package from the checkout, like the
     Spark driver; every scratch file (Spark's, the JVM's, Python's) stays in
-    ``run_dir`` and the driver heap stays small."""
+    ``run_dir``."""
     paths = [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(
         os.pathsep) if p]
     os.environ["PYTHONPATH"] = os.pathsep.join(paths)
@@ -70,7 +71,11 @@ def _environment(run_dir: str) -> dict[str, str]:
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(run_dir, "local")
-    os.environ.setdefault("SPARK_DRIVER_MEM", "2g")
+    # the package's 8g default is sized for corpora of 100k+ clips; these
+    # inputs need a fraction of 2g, and a fixed heap keeps GC, spill and
+    # wall from depending on the caller's environment or taking more of
+    # a shared host's memory than the run uses
+    os.environ["SPARK_DRIVER_MEM"] = "2g"
     os.environ["SPARK_GRAFT_CPUS"] = str(CORES)
     # the launcher JVM spark-submit starts before the driver's
     os.environ["SPARK_LAUNCHER_OPTS"] = (
@@ -130,7 +135,8 @@ class Ctx:
 def measure(w, ctx, seconds: float, tracer, sampler, record) -> list:
     """Inputs, then repetitions until their timed parts add up to
     ``seconds``, then the finish; returns every check made. A tracer,
-    when given, covers the repetitions and the finish."""
+    when given, covers the repetitions and the finish; a memory sampler,
+    when given, records each repetition's peak."""
     from perfbench.proc import Clock
 
     checks = []
@@ -148,11 +154,14 @@ def measure(w, ctx, seconds: float, tracer, sampler, record) -> list:
             t0 = time.perf_counter()
             w.setup()
             setup_s = time.perf_counter() - t0
-            sampler.reset()
+            if sampler is not None:
+                sampler.reset()
             with Clock(os.getpid()) as c:
                 clips = ctx.tracer.span("rep", w.scope, w.rep)
             reps.append({"setup_s": setup_s, "wall_s": c.wall, "cpu_s": c.cpu,
-                         "clips": clips, "peak_pss_mb": sampler.peak()})
+                         "clips": clips})
+            if sampler is not None:
+                reps[-1]["peak_pss_mb"] = sampler.peak()
             checks += w.checks(clips)
         if tracer is not None:
             record["trace_overhead_s"] = tracer.overhead_s / len(reps)
@@ -224,12 +233,15 @@ def _run(args, run_dir: str, workload_cls) -> int:
     ctx = Ctx(spark, store, args.seed, args.size, run_dir)
     w = workload_cls(ctx)
     checks, layers, error = [], {}, None
+    # the memory sampler's /proc reads run in this process; untraced
+    # runs, whose CPU time is a metric, go without it
+    sampler = TreeSampler(root_pid) if args.trace else None
     try:
-        with TreeSampler(root_pid) as sampler:
+        with sampler or contextlib.nullcontext():
             try:
                 checks = measure(w, ctx, args.seconds, tracer, sampler, record)
                 if tracer is not None:
-                    layers = w.layers(tracer)
+                    layers = w.layers()
             except Exception:
                 error = traceback.format_exc()
                 print(error, file=sys.stderr)

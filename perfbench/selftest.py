@@ -8,7 +8,8 @@
    instead and stops); the metric names and units printed equal
    ``BENCHMARK.json``'s, tracing off and on; a traced
    ``pipeline_audio`` run's ``pipeline.<stage>.s`` agree with its
-   ``run_stage`` spans.
+   ``run_stage`` spans, and its span-based metrics come from the timed
+   repetition.
 2. Each output check and the input check fail when given a wrong
    expected value (in-process, one session for all workloads).
 
@@ -64,6 +65,9 @@ def test_cli(pin: bool) -> None:
     from perfbench.workloads import SIZES, input_key
     store = inputs.InputStore(os.path.join(ROOT, ".bench_data"))
     pinned = {}
+    if pin:  # the runs below must not be held to the pins being replaced
+        with open(os.path.join(HERE, "pinned_inputs.json"), "w") as f:
+            f.write("{}\n")
     for w, sizes in SIZES.items():
         key = input_key(sizes["small"])
         for seed in (1, 2):
@@ -115,6 +119,20 @@ def check_stage_spans(metrics: dict) -> None:
             rep_s = metrics[f"pipeline.{stage}.s"]["value"]
             expect(abs(span_s - rep_s) <= max(0.1 * rep_s, 0.15),
                    f"pipeline.{stage}.s {rep_s:.2f} vs span {span_s:.2f}")
+
+    def timed(i: int) -> bool:  # span i runs inside that run_pipeline
+        while i is not None and i != first:
+            i = spans[i]["parent"]
+        return i == first
+
+    # the resume run that follows calls both again: these must still be
+    # the timed repetition's
+    for name, metric in (("build_candidates", "candidates.build_s"),
+                         ("connected_components", "components.s")):
+        span_s = sum(s["end"] - s["start"] for i, s in enumerate(spans)
+                     if s["name"] == name and timed(i))
+        expect(abs(span_s - metrics[metric]["value"]) < 1e-6,
+               f"{metric} is the timed repetition's {name} span")
 
 
 def test_checks_fail_on_wrong_expectations() -> None:

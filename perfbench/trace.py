@@ -3,7 +3,8 @@
 ``Tracer.install`` wraps, at run time and from this file only, the
 boundaries the per-layer metrics are read at: ``run_pipeline``,
 ``CheckpointStore.run_stage``, ``build_candidates``, ``verify_edges``,
-``connected_components`` and ``prepare_probe_index``; the workloads
+``connected_components`` (and each round of its star loop) and
+``prepare_probe_index``; the workloads
 open the spans around each ``QUERIES[name]`` call (with its collect)
 and around the streaming query themselves, and add its epochs as spans
 from ``recentProgress``. Each wrapper records a span (name, scope,
@@ -26,6 +27,7 @@ import os
 import statistics
 import time
 
+from addresses_importer_spark.operators import components
 from addresses_importer_spark.plans import driver_queries, pipeline
 from addresses_importer_spark.sources.checkpoint import CheckpointStore
 from addresses_importer_spark.streaming import dedup_probe
@@ -95,6 +97,9 @@ class Tracer:
                        const("connected_components"), const(None))
         self._wrap(dedup_probe, "prepare_probe_index",
                    const("prepare_probe_index"), const("probe"))
+        # one span per round of connected_components' large-star/small-star
+        # loop, which runs only above its driver union-find's edge bound
+        self._wrap(components, "_large_star", const("large_star"), const(None))
 
     def uninstall(self) -> None:
         while self._saved:
@@ -110,13 +115,6 @@ class Tracer:
                 "end": end,
             })
 
-    def last(self, name: str) -> float:
-        """Duration of the latest finished span called ``name``."""
-        for s in reversed(self.spans):
-            if s["name"] == name and "end" in s:
-                return s["end"] - s["start"]
-        return 0.0
-
     def dump(self, path: str) -> None:
         with open(path, "w") as f:
             json.dump(self.spans, f)
@@ -131,6 +129,12 @@ class NullTracer:
 
     def add_epochs(self, progress) -> None:
         pass
+
+
+def span_s(spans: list[dict], name: str) -> float:
+    """Seconds spent in the finished spans called ``name``."""
+    return sum(s["end"] - s["start"] for s in spans
+               if s["name"] == name and "end" in s)
 
 
 def _iso_to_epoch(ts: str) -> float:

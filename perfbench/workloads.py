@@ -9,7 +9,7 @@ Each workload has the same shape, driven by ``run.py``:
 - ``rep()``      one timed repetition; returns the clips it processed;
 - ``checks(r)``  output checks of one repetition; not timed;
 - ``finish()``   extra operations after the timed loop (traced runs);
-- ``layers(t)``  per-layer metrics of a traced run.
+- ``layers()``   per-layer metrics of a traced run.
 
 The first repetition of a run is cold: it is the first call of the
 workload's entry point in a session that has only generated and checked
@@ -35,7 +35,7 @@ from addresses_importer_spark.streaming.dedup_probe import start_dedup_probe
 
 from . import inputs
 from .metrics import DETECTORS, PIPELINE_STAGES as STAGES
-from .trace import percentile
+from .trace import percentile, span_s
 
 SIZES = {
     "pipeline_audio": {"full": {"n_base": 400}, "small": {"n_base": 120}},
@@ -144,17 +144,21 @@ class _Pipeline(Workload):
             shutil.rmtree(self.last[0], ignore_errors=True)
 
     def rep(self) -> int:
+        spans = self.ctx.tracer.spans
+        first = len(spans)
         res, n = self.run(self.ckpt)
         self.last = (self.ckpt, res, n)
+        # this repetition's own spans: finish() runs the pipeline again
+        self.rep_spans = spans[first:]
         self.n_reps += 1
         return len(self.ids)
 
     def survivor_ids(self, res) -> set[str]:
         return {r.clip_id for r in res.survivors.select("clip_id").collect()}
 
-    # per-layer: stage walls and checkpoint sizes of the last repetition,
-    # row counts per detector from its stage checkpoints
-    def layers(self, tracer) -> dict:
+    # per-layer: stage walls, spans and checkpoint sizes of the last
+    # repetition, row counts per detector from its stage checkpoints
+    def layers(self) -> dict:
         ckpt, res, _ = self.last
         m = res.metrics
         out = {}
@@ -174,7 +178,7 @@ class _Pipeline(Workload):
                                         if cands.get(d) else 0.0)
         out["candidates.hot_buckets"] = sum(v["buckets"] for v in hot.values())
         out["candidates.hot_rows"] = sum(v["rows"] for v in hot.values())
-        out["candidates.build_s"] = tracer.last("build_candidates")
+        out["candidates.build_s"] = span_s(self.rep_spans, "build_candidates")
         comps = self.spark.read.parquet(
             os.path.join(ckpt, "components", "data.parquet"))
         sizes = comps.groupBy("component").count()
@@ -184,13 +188,13 @@ class _Pipeline(Workload):
             os.path.join(ckpt, "verified_edges", "data.parquet")
         ).select(F.least("src", "dst").alias("u"), F.greatest("src", "dst")
                  .alias("v")).filter("u != v").distinct().count()
-        out["components.s"] = tracer.last("connected_components")
+        out["components.s"] = span_s(self.rep_spans, "connected_components")
         out["components.edges_in"] = n_in
         out["components.count"] = agg["n"] or 0
         out["components.max_size"] = agg["mx"] or 0
-        # connected_components' default driver bound: above it the
-        # large-star/small-star loop runs instead of the union-find
-        out["components.star_loop"] = int(n_in > 1_000_000)
+        # star rounds run; 0 when the driver union-find solved the graph
+        out["components.star_loop"] = sum(
+            1 for sp in self.rep_spans if sp["name"] == "large_star")
         out["survivors.losers"] = m.get("rows:losers", 0)
         return out
 
@@ -262,9 +266,9 @@ class PipelineAudio(_Pipeline):
                 Check("resume.stages", resumed, ["features", "signatures"]),
                 *self.probe.checks(0)]
 
-    def layers(self, tracer) -> dict:
-        out = super().layers(tracer)
-        out.update(self.probe.layers(tracer))
+    def layers(self) -> dict:
+        out = super().layers()
+        out.update(self.probe.layers())
         out.update({"checkpoint.resume_s": self.resume_s,
                     "checkpoint.resume_read_s": self.resume_read_s,
                     "quality.dup_recall": self.dup_recall})
@@ -375,7 +379,7 @@ class ContractChain(Workload):
             out.append(Check(f"query.{q}.digest", rows_key(got), want[1]))
         return out
 
-    def layers(self, tracer) -> dict:
+    def layers(self) -> dict:
         return {f"query.{q}.s": _median(v) for q, v in self.query_s.items()}
 
 
@@ -481,7 +485,7 @@ class ProbeStream(Workload):
             Check("probe.planted_found", found, len(self.planted)),
         ]
 
-    def layers(self, tracer) -> dict:
+    def layers(self) -> dict:
         trig = [b - a for a, b in zip(self.add_ms, self.batch_ms)]
         return {
             "probe.index_rows": self.spark.read.parquet(
