@@ -79,16 +79,3 @@ def apply_deletions_bucketed(valid: DataFrame, losers: DataFrame,
     bucketed = spark.table(table_name)
     return bucketed.join(losers.select("clip_id"), "clip_id", "left_anti")
 
-
-def survivor_table(components: DataFrame, ranks: DataFrame) -> DataFrame:
-    """(component, clip_id) — the chosen representative per component
-    (diagnostics / recall measurement)."""
-    w = Window.partitionBy("component").orderBy(
-        F.desc("rank"), F.desc("clip_id")
-    )
-    return (
-        components.join(ranks, "clip_id", "left")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("component", "clip_id")
-    )

@@ -17,26 +17,25 @@ wherever possible; doubles only where unavoidable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..config import DedupConfig
 from ..functions import oracle_fragments as O
 from ..functions.hashing import POLY_BASE, POLY_MOD, md5_long
 from ..functions.text import normalize_text, token_count
-from ..operators.candidates import build_candidates
-from ..operators.components import connected_components
+# build_candidates, connected_components and verify_edges stay module
+# attributes here: perfbench's tracer wraps them on this module too
+from ..operators.candidates import build_candidates  # noqa: F401
+from ..operators.components import connected_components  # noqa: F401
 from ..operators.materialize import materialize
-from ..operators.signatures import (
-    DETECTOR_MINHASH, DETECTOR_SUFFIX, build_features, build_signatures,
-)
+from ..operators.signatures import DETECTOR_MINHASH, DETECTOR_SUFFIX
 from ..operators.similarity import (
     ann_near_dup_pairs_banded, band_bucket_sql, banded_planes,
     cosine_expr as _cosine_expr, lsh_planes, lsh_sizing,
 )
-from ..operators.survivors import apply_deletions, pick_losers
-from ..operators.verify import verify_edges
+from ..operators.survivors import apply_deletions
+from ..operators.verify import verify_edges  # noqa: F401
+from .pipeline import DedupStages, stage_conf
 
 CFG = DedupConfig()
 
@@ -281,105 +280,33 @@ def _chain_val(spark: SparkSession, key: tuple, builder):
     return _CHAIN_CACHE[full][1]
 
 
-def _corpus_feats(spark, sf_dir):
-    """(corpus, feats) — feats lineage-cut: the MinHash column is
-    referenced many times downstream (dual verify joins, CC rounds,
-    loser pick); without materialization each action would recompute
-    the full 64-perm chain (observed: >8 min for what runs in ~20 s
-    checkpointed)."""
-    def build():
-        corpus = corpus_df(spark, sf_dir)
-        feats = materialize(
-            build_features(corpus, CFG, with_audio=False), eager=False
-        )
-        return corpus, feats
-    return _chain_val(spark, ("feats", sf_dir), build)
+def _stages(spark: SparkSession, sf_dir: str,
+            detectors: tuple[str, ...]) -> DedupStages:
+    """The contract chain: the pipeline's own stage code over the
+    derived corpus, each stage lineage-cut once per session (the
+    MinHash column alone is referenced by the dual verify joins, CC
+    rounds and the loser pick; recomputed per action the 64-perm chain
+    took minutes). Features do not depend on the detectors, so the
+    minhash and suffix chains share one features frame."""
+    def run(stage, upstream, compute, **_opts) -> DataFrame:
+        key = (stage, sf_dir) + (() if stage == "features" else (detectors,))
 
+        def build():
+            with stage_conf(spark):
+                return materialize(compute(), eager=True)
+        return _chain_val(spark, key, build)
 
-def _chain_sigs(spark, sf_dir, detectors):
-    detectors = tuple(sorted(detectors))
-    _, feats = _corpus_feats(spark, sf_dir)
     return _chain_val(
-        spark, ("sigs", sf_dir, detectors),
-        lambda: materialize(
-            build_signatures(feats, CFG, detectors=detectors), eager=False
-        ),
+        spark, ("stages", sf_dir, detectors),
+        lambda: DedupStages(corpus_df(spark, sf_dir), CFG, run,
+                            detectors=detectors, with_audio=False),
     )
-
-
-def _chain_cands(spark, sf_dir, detectors):
-    detectors = tuple(sorted(detectors))
-    sigs = _chain_sigs(spark, sf_dir, detectors)
-
-    def build():
-        # size-targeted AQE coalescing for the candidate build (same
-        # rationale + knob as the pipeline's scope, plans/pipeline.py):
-        # the grouped-bucket aggs and pair paths here run half a dozen
-        # small shuffles whose bytes DO track work; parallelism-first
-        # coalescing left ~2/core near-empty reduce tasks per shuffle
-        # (interleaved A/B warm: 4.7 s -> 4.5 s; larger effect cold).
-        # Scoped and restored — the Jaccard chain's fan-out joins stay
-        # on the session default.
-        keys = {
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst":
-                "false",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes":
-                os.environ.get("SPARK_GRAFT_ADVISORY_MB", "8") + "m",
-        }
-        old = {k: spark.conf.get(k) for k in keys}
-        for k, v in keys.items():
-            spark.conf.set(k, v)
-        try:
-            handles: list = []
-            cands = build_candidates(sigs, CFG, handles_out=handles)
-            out = materialize(
-                cands.select("src", "dst", "detector"), eager=True
-            )
-            for h in handles:  # pair set materialized — release blocks
-                h.unpersist()
-            return out
-        finally:
-            for k, v in old.items():
-                spark.conf.set(k, v)
-    return _chain_val(spark, ("cands", sf_dir, detectors), build)
-
-
-def _chain_verified(spark, sf_dir, detectors):
-    detectors = tuple(sorted(detectors))
-    _, feats = _corpus_feats(spark, sf_dir)
-    cands = _chain_cands(spark, sf_dir, detectors)
-    return _chain_val(
-        spark, ("verified", sf_dir, detectors),
-        lambda: materialize(
-            verify_edges(cands, feats, CFG)
-            .select("src", "dst")
-            .dropDuplicates(["src", "dst"]),
-            eager=False,
-        ),
-    )
-
-
-def _chain_components(spark, sf_dir, detectors):
-    detectors = tuple(sorted(detectors))
-    verified = _chain_verified(spark, sf_dir, detectors)
-    return _chain_val(
-        spark, ("comps", sf_dir, detectors),
-        lambda: connected_components(
-            verified, CFG.cc_max_iters, CFG.cc_checkpoint_every
-        ),
-    )
-
-
-def _corpus_feats_sigs(spark, sf_dir, detectors):
-    """Back-compat composite accessor (tests, tools)."""
-    corpus, feats = _corpus_feats(spark, sf_dir)
-    return corpus, feats, _chain_sigs(spark, sf_dir, detectors)
 
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H1/H2 graft: per-clip banded MinHash keys, exploded 1:N
     (dedupe.rs:61-86; db_hashes.rs:61-65)."""
-    _, _, sigs = _corpus_feats_sigs(spark, sf_dir, (DETECTOR_MINHASH,))
+    sigs = _stages(spark, sf_dir, (DETECTOR_MINHASH,))["signatures"]
     return sigs.select("clip_id", "detector", "band", "bucket_key")
 
 
@@ -391,7 +318,7 @@ SQL_MINHASH_SIGNATURES = _with(
 
 def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/J2 graft: bucket-collision candidate pairs (db_hashes.rs:484-513)."""
-    return _chain_cands(spark, sf_dir, (DETECTOR_MINHASH,))
+    return _stages(spark, sf_dir, (DETECTOR_MINHASH,))["candidates"]
 
 
 SQL_LSH_CANDIDATES = _with(
@@ -403,7 +330,10 @@ SQL_LSH_CANDIDATES = _with(
 def q_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V1 graft: candidates surviving exact-Jaccard verification
     (dedupe.rs:129-198)."""
-    return _chain_verified(spark, sf_dir, (DETECTOR_MINHASH,))
+    # distinct (src, dst) by construction: candidates are distinct per
+    # detector and corpus clip ids are unique
+    return _stages(spark, sf_dir, (DETECTOR_MINHASH,))["verified_edges"] \
+        .select("src", "dst")
 
 
 SQL_VERIFIED_PAIRS = _with(
@@ -415,7 +345,7 @@ SQL_VERIFIED_PAIRS = _with(
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 graft: large-star/small-star CC labels vs a recursive
     min-label-propagation oracle."""
-    return _chain_components(spark, sf_dir, (DETECTOR_MINHASH,))
+    return _stages(spark, sf_dir, (DETECTOR_MINHASH,))["components"]
 
 
 SQL_DEDUP_COMPONENTS = _with(
@@ -432,10 +362,8 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     document beat its 80%-prefix copy (deduplicator.rs:157-164
     tiebreak + sources.rs:86-88 completeness) + LEFT ANTI deletion
     (db_hashes.rs:306-319)."""
-    corpus, feats = _corpus_feats(spark, sf_dir)
-    comps = _chain_components(spark, sf_dir, (DETECTOR_MINHASH,))
-    losers = pick_losers(comps, feats.select("clip_id", "rank"))
-    return apply_deletions(corpus, losers).select("clip_id")
+    stages = _stages(spark, sf_dir, (DETECTOR_MINHASH,))
+    return apply_deletions(stages.clips, stages["losers"]).select("clip_id")
 
 
 # rank replicated from operators/signatures.rank_expr for the contract
@@ -472,7 +400,8 @@ SQL_DEDUP_SURVIVORS = _with(
 def q_suffix_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Suffix/containment detector: rarest-shingle blocking + exact
     substring verify (the distributed-suffix-array graft)."""
-    return _chain_verified(spark, sf_dir, (DETECTOR_SUFFIX,))
+    return _stages(spark, sf_dir, (DETECTOR_SUFFIX,))["verified_edges"] \
+        .select("src", "dst")
 
 
 SQL_SUFFIX_VERIFIED = _with(
@@ -484,7 +413,7 @@ SQL_SUFFIX_VERIFIED = _with(
 def q_collision_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4 graft: GROUP BY hash HAVING count>1 + outer SUM
     (db_hashes.rs:197-213)."""
-    _, _, sigs = _corpus_feats_sigs(spark, sf_dir, (DETECTOR_MINHASH,))
+    sigs = _stages(spark, sf_dir, (DETECTOR_MINHASH,))["signatures"]
     return (
         sigs.groupBy("bucket_key")
         .agg(F.countDistinct("clip_id").alias("n"))
@@ -1474,7 +1403,7 @@ def q_cluster_size_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterates exactly these groups; this materializes their size
     distribution in two map-side-combinable aggs, no extra shuffle
     beyond the component key (already the CC output partitioning)."""
-    comps = _chain_components(spark, sf_dir, (DETECTOR_MINHASH,))
+    comps = _stages(spark, sf_dir, (DETECTOR_MINHASH,))["components"]
     sizes = comps.groupBy("component").agg(
         F.count("*").alias("cluster_size")
     )

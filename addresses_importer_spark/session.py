@@ -33,11 +33,11 @@ def get_spark(
         # pipeline_full 36.8 -> 45.7 s — scheduling overhead, with AQE
         # coalescing unable to undo the finer aggregation partitions.
         # The 390k win is kept where it was earned: run_pipeline
-        # doubles the setting at runtime when the INPUT clears
-        # SHUFFLE_UPSHIFT_ROWS (plans/pipeline.py), so big jobs get
-        # 4/core and everything else keeps 2/core.
-        mult = int(os.environ.get("SPARK_GRAFT_SHUFFLE_MULT", "2"))
-        shuffle_partitions = max(mult * cores, 8)
+        # doubles the setting at runtime when the input clears
+        # MIN_ROWS_PER_SHUFFLE_PARTITION per doubled partition
+        # (plans/pipeline.py), so big jobs get 4/core and everything
+        # else keeps 2/core.
+        shuffle_partitions = max(2 * cores, 8)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -56,10 +56,10 @@ def get_spark(
         # per-row array math) whose shuffle bytes under-represent their
         # CPU: ngram_jaccard_pairs went 13.6 s -> 35.7 s when its
         # stages coalesced to a handful of few-MB partitions. The
-        # pipeline win is kept where it was earned: run_pipeline scopes
-        # size-targeted coalescing around its own stages
-        # (plans/pipeline.py), and the session keeps Spark's default
-        # parallelism-first behavior for ad-hoc queries.
+        # pipeline win is kept where it was earned: the dedup stages
+        # run under a scoped size-targeted coalescing conf
+        # (plans/pipeline.stage_conf), and the session keeps Spark's
+        # default parallelism-first behavior for ad-hoc queries.
         # Arrow batches for every pandas UDF (zero per-row Python).
         # 512 rows/batch: clips carry ~30KB audio payloads, so the
         # default 10k-row batches were ~330MB of Arrow per task — memory

@@ -4,8 +4,8 @@ The reference's stage boundary IS a SQLite file (SURVEY §3.1): each
 phase writes durable state the next phase reads, and `--keep` reuses an
 existing DB (bin/main.rs:90-103). The graft mirrors that with one
 parquet table + one manifest JSON per stage; a stage is skipped on
-resume iff its manifest exists AND records the same config hash +
-upstream fingerprint chain.
+resume iff its manifest exists AND records the same config hash, run
+arguments and upstream fingerprint chain.
 
 Layout:  {root}/{stage}/data.parquet/…   +   {root}/{stage}/MANIFEST.json
 
@@ -72,7 +72,8 @@ class CheckpointStore:
     FUSE mount); bare hdfs://-style URIs are rejected up front instead
     of writing parquet fine and then recording rows=0 manifests."""
 
-    def __init__(self, root: str, config_hash: str):
+    def __init__(self, root: str, config_hash: str,
+                 run_args: dict | None = None):
         # urlsplit, not a '://' scan: Hadoop-style single-slash URIs
         # ('hdfs:/tmp/ck', 'file:/tmp/ck') carry no '//', so a
         # substring check resolved them to 'file' and Spark wrote
@@ -90,6 +91,9 @@ class CheckpointStore:
             )
         self.root = parts.path if parts.scheme == "file" else root
         self.config_hash = config_hash
+        # run arguments outside the config (detectors, audio on/off):
+        # JSON-shaped so a manifest round-trip compares equal
+        self.run_args = run_args or {}
         os.makedirs(self.root, exist_ok=True)
 
     def _dir(self, stage: str) -> str:
@@ -111,7 +115,8 @@ class CheckpointStore:
     def is_complete(self, stage: str, upstream: list[str],
                     input_fingerprint: str | None = None) -> bool:
         m = self.manifest(stage)
-        if m is None or m.get("config_hash") != self.config_hash:
+        if (m is None or m.get("config_hash") != self.config_hash
+                or m.get("run_args", {}) != self.run_args):
             return False
         if input_fingerprint is not None and m.get("input") != input_fingerprint:
             # root stages (no upstream manifests) are pinned to their
@@ -164,6 +169,7 @@ class CheckpointStore:
         manifest = {
             "stage": stage,
             "config_hash": self.config_hash,
+            "run_args": self.run_args,
             "schema": df.schema.json(),
             "rows": rows,
             "fingerprint": f"{self.config_hash}:{rows}:{digest}",

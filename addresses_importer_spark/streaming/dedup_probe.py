@@ -158,9 +158,21 @@ def prepare_probe_index(spark: SparkSession, index_features_path: str,
     return stats
 
 
-def load_probe_index(spark: SparkSession,
-                     index_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(index_sigs, index_feats) readers over a prepared index dir."""
+def load_probe_index(spark: SparkSession, index_dir: str,
+                     cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
+    """(index_sigs, index_feats) readers over a prepared index dir.
+
+    Raises ValueError when the index was prepared under another config
+    hash: its signatures need not agree with the batch side's (keys of
+    another layout silently match nothing), the same rule the stage
+    checkpoints apply on resume."""
+    with open(os.path.join(index_dir, _STATS_FILE)) as f:
+        got = json.load(f).get("config_hash")
+    if got != cfg.config_hash():
+        raise ValueError(
+            f"probe index {index_dir!r} was prepared under config hash "
+            f"{got!r}, not {cfg.config_hash()!r}: prepare it again"
+        )
     return (
         spark.read.parquet(os.path.join(index_dir, _SIGS_DIR)),
         spark.read.parquet(os.path.join(index_dir, _FEATS_DIR)),
@@ -265,7 +277,7 @@ def start_dedup_probe(spark: SparkSession, clips_path: str,
             )
         prepared_index_dir = f"{checkpoint_path.rstrip('/')}_index"
         prepare_probe_index(spark, index_features_path, prepared_index_dir, cfg)
-    index_sigs, index_feats = load_probe_index(spark, prepared_index_dir)
+    index_sigs, index_feats = load_probe_index(spark, prepared_index_dir, cfg)
 
     def _process(batch_df: DataFrame, epoch_id: int) -> None:
         edges = probe_edges(

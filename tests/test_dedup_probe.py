@@ -155,7 +155,7 @@ def test_probe_cap_truncation_is_counted_not_silent(spark, tmp_path):
     stats = prepare_probe_index(spark, feats_path, idx_dir, CFG, bucket_cap=3)
     assert stats["truncated_buckets"] > 0
     assert stats["truncated_rows"] > 0
-    sigs, _ = load_probe_index(spark, idx_dir)
+    sigs, _ = load_probe_index(spark, idx_dir, CFG)
     from pyspark.sql import functions as F
     max_bucket = (
         sigs.groupBy("detector", "band", "bucket_key")
@@ -185,7 +185,7 @@ def test_replayed_clip_id_reported_as_exact_dup(spark, tmp_path):
     build_features(to_spark(spark, index_pdf), CFG).write.parquet(feats_path)
     idx_dir = str(tmp_path / "probe_index")
     prepare_probe_index(spark, feats_path, idx_dir, CFG)
-    sigs, feats = load_probe_index(spark, idx_dir)
+    sigs, feats = load_probe_index(spark, idx_dir, CFG)
 
     # batch = one replayed index clip + the normal streamed dups
     replay_id = sorted(index_ids)[0]
@@ -210,3 +210,22 @@ def test_replayed_clip_id_reported_as_exact_dup(spark, tmp_path):
     for r in edges:
         if r.src == replay_id and r.detector != "exact_id":
             assert cluster_of[r.src] == cluster_of[r.dst]
+
+
+def test_stale_probe_index_raises(spark, tmp_path):
+    """An index prepared under another config hash must be refused at
+    load, not probed: its bucket keys would match nothing, silently."""
+    from addresses_importer_spark.streaming.dedup_probe import (
+        load_probe_index, prepare_probe_index,
+    )
+
+    pdf, _truth = fixture_with_dupes()
+    feats_path = str(tmp_path / "index_features")
+    build_features(
+        to_spark(spark, pdf), CFG, with_audio=False
+    ).write.parquet(feats_path)
+    idx_dir = str(tmp_path / "probe_index")
+    prepare_probe_index(spark, feats_path, idx_dir, CFG)
+    load_probe_index(spark, idx_dir, CFG)
+    with pytest.raises(ValueError, match="config hash"):
+        load_probe_index(spark, idx_dir, DedupConfig(jaccard_threshold=0.7))

@@ -54,6 +54,38 @@ def test_config_change_invalidates(spark, tmp_path):
     assert res.resumed_stages == []
 
 
+def test_run_args_change_invalidates(spark, tmp_path):
+    """detectors and with_audio are part of every stage's identity: a
+    default run after a suffix-only, audio-off run on the same dir must
+    recompute everything, so its SimHash edges exist and it keeps the
+    survivor count of a fresh dir."""
+    pdf, truth = fixture_with_dupes()
+    clips = to_spark(spark, pdf)
+    ckpt = str(tmp_path / "ck")
+    run_pipeline(spark, clips, CFG, ckpt, detectors=("suffix",),
+                 with_audio=False)
+    res = run_pipeline(spark, clips, CFG, ckpt)
+    assert res.resumed_stages == []
+    assert res.verified_edges.filter("detector = 'simhash'").count() > 0
+    assert res.survivors.count() == 10
+
+
+def test_upstream_recomputes_before_downstream_resume_check(spark, tmp_path):
+    """Losing only the signatures manifest must recompute signatures
+    and every stage below it: each stage checks its upstream manifests
+    after the upstream stages have run, so none resumes against the
+    stale fingerprints of the first run."""
+    pdf, truth = fixture_with_dupes()
+    clips = to_spark(spark, pdf)
+    ckpt = str(tmp_path / "ck")
+    n1 = run_pipeline(spark, clips, CFG, ckpt).survivors.count()
+    os.remove(os.path.join(ckpt, "signatures", "MANIFEST.json"))
+
+    res = run_pipeline(spark, clips, CFG, ckpt)
+    assert res.resumed_stages == ["features"]
+    assert res.survivors.count() == n1
+
+
 def test_input_change_invalidates(spark, tmp_path):
     """Same checkpoint dir, different --input path: the features stage's
     input fingerprint must force a full recompute (round-1 gap: only
